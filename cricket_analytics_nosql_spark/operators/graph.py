@@ -6,14 +6,15 @@ The reference projects deliveries into a Neo4j property graph
 DataFrames — ``vertices(id, ...)`` and ``edges(src, dst, ...)`` —
 and every Cypher query shape is a join/aggregation on them.
 
-PageRank (G2) is the one algorithm with real iterative content:
-each iteration is one join + one groupBy (one shuffle), with
-``localCheckpoint`` every few iterations to truncate lineage —
-without it the plan tree doubles per iteration and the driver
-OOMs long before 100 TB is the problem. Only O(1) scalars ever
-reach the driver (the dangling-mass total — computed inside the
-contrib shuffle via rollup, fetched as one row — and an optional
-convergence delta); ranks themselves stay distributed.
+PageRank (G2) is the one algorithm with real iterative content.
+Past ``EDGES_PER_TASK`` edges each iteration is one join + one
+groupBy, ``localCheckpoint``-ed to truncate lineage — without it the
+plan tree doubles per iteration and the driver OOMs long before
+100 TB is the problem; only O(1) scalars per iteration reach the
+driver (the power-vector sums the dangling mass and the convergence
+bound are derived from), ranks themselves stay distributed. Below
+it the whole power series runs inside one ``mapInArrow`` task
+instead of two scheduler round-trips per iteration.
 
 Generic testdata binding: the customer↔supplier trade graph
 (who bought from whom, via lineitem×orders). For PageRank the
@@ -25,6 +26,10 @@ conflate customer k with supplier k.
 
 from __future__ import annotations
 
+import sys
+from collections.abc import Callable
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -116,6 +121,15 @@ LIMIT 25
 # (cypher_queries.cypher:31-34: gds.pageRank.stream, top-20 by score)
 # ---------------------------------------------------------------------------
 
+# Edge rows one task carries (~5 MB of edge rows, ~15 MB of working
+# set in the in-task kernel): the distributed loop sizes its
+# partitions by it, and an edge list within it runs the whole power
+# series inside one task (see ``pagerank``). A memory budget, not a
+# speed crossover. 0 turns the in-task path off and leaves the loop
+# at its 2-partition floor.
+EDGES_PER_TASK = 150_000
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -130,10 +144,10 @@ def pagerank(
     column (gds.pageRank's relationshipWeightProperty): mass leaves
     each vertex proportionally to edge weight, w/Σw(src), instead of
     uniformly 1/out_deg. Either way the per-edge transition ratio is
-    PRECOMPUTED into the checkpointed link table, so the iteration
-    multiplies instead of divides and the Krylov loop below is
-    identical for both modes (row-stochastic either way — the
-    dangling-mass arithmetic needs no change).
+    PRECOMPUTED into the link table, so the iteration multiplies
+    instead of divides and the Krylov recurrence below is identical
+    for both modes (row-stochastic either way — the dangling-mass
+    arithmetic needs no change).
     Returns ``(id, pagerank)`` with scores summing to the
     vertex count (the gds.pageRank normalization).
 
@@ -145,36 +159,56 @@ def pagerank(
 
     where w_1 = A(1) and w_{j+1} = A(w_j) are iteration-invariant
     "power vectors" of the graph, and the coefficients a_{k,j} plus
-    the dangling-mass scalars are plain Python floats the driver
-    tracks. So each iteration materializes exactly ONE new vertex-
-    sized frame w_{k+1} via ONE fixed-shape job — links ⋈ w_k →
-    project → partial/final sum — whose generated code never changes
-    (no per-iteration literals → whole-stage-codegen cache hits
-    every round; with the dangling-mass scalar baked in as a literal,
-    each round recompiled its stage — measured ~0.3 s/iteration at
-    sf0.1, the dominant loop cost). Σw_{k+1} is measured by an
-    ``Observation`` on the pre-agg rows of the same job, so only O(1)
-    bytes reach the driver per round.
+    the dangling-mass scalars are plain Python floats
+    (``_power_series``) computed from the sums S_j = Σw_j alone.
 
     Dangling mass needs no pass of its own: mass is conserved at N,
-    so dm_k = N − Σ_v contrib_k(v) = N − Σ_j a_{k,j}·S_j with
-    S_j = Σw_j — driver-side arithmetic. base_k = (1−d) + d·dm_k/N.
-    The final ranks are one linear-combination job
-    (union of a_j-scaled w_j frames → sum per vertex) plus one join
-    against the vertex universe.
+    so dm_k = N − Σ_v contrib_k(v) = N − Σ_j a_{k,j}·S_j —
+    scalar arithmetic. base_k = (1−d) + d·dm_k/N.
 
     Convergence (``tol``): |contrib_{k+1} − contrib_k|₁ ≤
-    Σ_j |Δa_j|·S_j (all w_j ≥ 0) — a free driver-side bound, checked
+    Σ_j |Δa_j|·S_j (all w_j ≥ 0) — a free scalar bound, checked
     every ``check_every`` rounds; no probe jobs at all.
 
-    Inside the loop, adaptive execution is pure per-iteration
-    overhead — every AQE stage materialization is an extra scheduler
-    round-trip, and the loop's plans are fully known: the contrib
-    shuffle is vertex-sized, so its partition count is sized directly
-    from the measured edge count (~500k rows ≈ 8 MB per partition)
-    instead of discovered adaptively. AQE-off + fixed-plan measured
-    at sf0.1: ~0.14 s/iteration vs ~0.45 s with either AQE or the
-    literal recompile in play. Confs are restored after the loop.
+    Two physical paths compute the power vectors, gated on the edge
+    count m measured by the entry checkpoint:
+
+    - **In one task** when m < ``EDGES_PER_TASK`` — the per-task
+      budget the distributed loop sizes its partitions by, so this
+      path never asks one task to hold more edges than each loop
+      task holds. The edge list is coalesced into one ``mapInArrow``
+      task that factorizes the ids, runs ``_power_series`` with a
+      ``grow`` that computes the next w_j by ``np.bincount`` only
+      when asked (so ``tol`` and exhaustion stop the work), and
+      emits ``(id, pagerank)``; n is the task's vertex count. The
+      vectors are replayed for the final Σ coef_j·w_j instead of
+      kept, so memory is O(n + m) for any ``max_iter``. At this
+      size the distributed loop is pure scheduler cost — two jobs
+      per round at ~0.1 s each — so the cricket duel graph's
+      gds.pageRank drops from 39 jobs to 5. No session conf is
+      touched. The budget is not a speed crossover: on 4 local
+      cores this path also beat the loop at 1.17M and 3M edges.
+    - **Distributed** otherwise — the only path for an edge list
+      one worker cannot hold: each round materializes exactly ONE
+      new vertex-sized frame w_{k+1} via ONE fixed-shape job —
+      links ⋈ w_k → project → partial/final sum — whose generated
+      code never changes (no per-iteration literals → whole-stage-
+      codegen cache hits every round; with the dangling-mass scalar
+      baked in as a literal, each round recompiled its stage —
+      measured ~0.3 s/iteration at sf0.1). Σw_{k+1} is measured by an
+      ``Observation`` on the pre-agg rows of the same job. The final
+      ranks are one linear-combination job (union of a_j-scaled w_j
+      frames → sum per vertex) plus one join against the vertex
+      universe.
+
+    Inside the distributed loop, adaptive execution is pure
+    per-iteration overhead — every AQE stage materialization is an
+    extra scheduler round-trip, and the loop's plans are fully known:
+    the contrib shuffle is vertex-sized, so its partition count is
+    sized directly from the measured edge count instead of discovered
+    adaptively. AQE-off + fixed-plan measured at sf0.1: ~0.14
+    s/iteration vs ~0.45 s with either AQE or the literal recompile in
+    play. Confs are restored after the loop.
 
     Lineage discipline (SURVEY §7.8 risk 1): every w_j is
     ``localCheckpoint``-ed — each is small (one row per in-linked
@@ -199,6 +233,26 @@ def pagerank(
     m = int(e_obs.get["m"])
     if m == 0:
         return spark.createDataFrame([], "id long, pagerank double")
+    d = float(damping)
+    if weight_col is not None:
+        # fail fast on the positive-weight precondition (gds rejects
+        # non-positive relationship weights too): a src whose weights
+        # sum to 0/NULL would get p = NULL and its mass silently
+        # dropped as phantom dangling mass. One bounded probe over the
+        # already-checkpointed edges — short-circuits at the first
+        # offending row.
+        bad = (
+            edges.filter(F.col(weight_col).isNull() | (F.col(weight_col) <= 0))
+            .limit(1)
+            .count()
+        )
+        if bad:
+            raise ValueError(
+                f"pagerank: weight_col {weight_col!r} must be "
+                "positive and non-null on every edge"
+            )
+    if m < EDGES_PER_TASK:
+        return _pagerank_in_task(edges, d, max_iter, tol, check_every, weight_col)
 
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -207,12 +261,11 @@ def pagerank(
     # contrib shuffle. Locally the loop is task-launch-bound, so
     # fewer/fatter partitions win (measured at 1.2M edges on
     # local[32]: 8 parts ≈ 0.23 s/round vs 64 natural ≈ 0.35 s); at
-    # cluster scale the same formula (~150k edge rows ≈ 5 MB per
-    # task) keeps partitions comfortably in-memory.
-    loop_parts = max(2, m // 150_000)
+    # cluster scale the same formula keeps partitions comfortably
+    # in-memory.
+    loop_parts = max(2, m // EDGES_PER_TASK) if EDGES_PER_TASK else 2
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    d = float(damping)
     try:
         if weight_col is None:
             out_mass = edges.groupBy("src").agg(
@@ -220,24 +273,6 @@ def pagerank(
             )
             edge_w = F.lit(1.0)
         else:
-            # fail fast on the positive-weight precondition (gds
-            # rejects non-positive relationship weights too): a src
-            # whose weights sum to 0/NULL would get p = NULL and its
-            # mass silently dropped as phantom dangling mass. One
-            # bounded probe over the already-checkpointed edges —
-            # short-circuits at the first offending row.
-            bad = (
-                edges.filter(
-                    F.col(weight_col).isNull() | (F.col(weight_col) <= 0)
-                )
-                .limit(1)
-                .count()
-            )
-            if bad:
-                raise ValueError(
-                    f"pagerank: weight_col {weight_col!r} must be "
-                    "positive and non-null on every edge"
-                )
             out_mass = edges.groupBy("src").agg(
                 F.sum(F.col(weight_col).cast("double")).alias("w_out")
             )
@@ -281,11 +316,11 @@ def pagerank(
         # sort-before-repartition pass (SPARK-23207). Skew bound for
         # this path: it only serves graphs whose vertex count n ≤
         # broadcast_max_vertices, and a key's rows ≤ its in-degree
-        # < n, so one hot dst costs at most ~n/150k task-widths of
-        # imbalance — bounded, unlike open-ended key skew. If the
-        # vertex count turns out too big to broadcast, the link
-        # table is re-partitioned ONCE on the join key below (one
-        # extra edge shuffle, amortized over every round).
+        # < n, so one hot dst costs at most ~n/EDGES_PER_TASK
+        # task-widths of imbalance — bounded, unlike open-ended key
+        # skew. If the vertex count turns out too big to broadcast,
+        # the link table is re-partitioned ONCE on the join key below
+        # (one extra edge shuffle, amortized over every round).
         links = links.repartition(loop_parts, F.col("dst")).localCheckpoint()
 
         # w_1 = A(1): no join — Σ p over in-edges.
@@ -298,16 +333,6 @@ def pagerank(
             .localCheckpoint()
         )
         ws = [w1]
-        sums = [float(obs1.get["s"] or 0.0)]
-        coef = [1.0]  # contrib_1 = w_1
-        # A annihilates a power vector (Σw_j = 0 with w ≥ 0 ⇒ w_j is
-        # identically zero ⇒ every later w is zero too: A is linear
-        # and positivity-preserving). From that point the remaining
-        # rounds are pure coefficient arithmetic — no more jobs. Not
-        # a corner case: any DAG reaches it at depth ≤ diameter, and
-        # the bipartite trade graph reaches it at j = 2, which turns
-        # 11 of this bench query's 12 rounds into driver-side floats.
-        exhausted = sums[0] == 0.0
 
         # Vertex universe = src ∪ dst — but srcs are links' join keys
         # and every in-linked dst is already a w_1 row, so the union
@@ -330,51 +355,33 @@ def pagerank(
                 loop_parts, F.col("id")
             ).localCheckpoint()
 
-        def apply_a(x: DataFrame) -> tuple[DataFrame, float]:
-            """w(dst) = Σ x(src)·p(src→dst) over in-edges (p is the
-            precomputed transition ratio: 1/out_deg unweighted,
-            w/Σw(src) weighted); returns (checkpointed w, Σw) — Σ
-            observed on the pre-agg rows of the same job."""
+        def grow() -> float:
+            """w_{j+1}(dst) = Σ w_j(src)·p(src→dst) over in-edges (p
+            is the precomputed transition ratio: 1/out_deg unweighted,
+            w/Σw(src) weighted), checkpointed; returns Σw_{j+1} —
+            observed on the pre-agg rows of the same job. A zero
+            frame is dropped."""
             obs = Observation()
             w = (
-                links.join(maybe_bcast(x.withColumnRenamed("dst", "id")), "id")
+                links.join(maybe_bcast(ws[-1].withColumnRenamed("dst", "id")), "id")
                 .select("dst", (F.col("x") * F.col("p")).alias("c"))
                 .observe(obs, F.sum("c").alias("s"))
                 .groupBy("dst")
                 .agg(F.sum("c").alias("x"))
                 .localCheckpoint()
             )
-            return w, float(obs.get["s"] or 0.0)
+            s = float(obs.get["s"] or 0.0)
+            if s != 0.0:
+                ws.append(w)
+            return s
 
-        for i in range(1, max_iter):
-            dm = float(n) - sum(a * s for a, s in zip(coef, sums))
-            base = (1.0 - d) + d * dm / float(n)
-            if not exhausted:
-                w_next, s_next = apply_a(ws[-1])
-                if s_next == 0.0:
-                    exhausted = True  # zero frame: drop it, and all later
-                else:
-                    ws.append(w_next)
-                    sums.append(s_next)
-            # truncation is exact: coefficients shifted past len(ws)
-            # would multiply identically-zero frames
-            new_coef = ([base] + [d * a for a in coef])[: len(ws)]
-            if tol is not None and (i + 1) % check_every == 0:
-                padded = coef + [0.0]
-                bound = sum(
-                    abs(a - b) * s for a, b, s in zip(new_coef, padded, sums)
-                )
-                coef = new_coef
-                if bound < tol * n:
-                    break
-            else:
-                coef = new_coef
+        coef, base = _power_series(
+            n, d, float(obs1.get["s"] or 0.0), grow, max_iter, tol, check_every
+        )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
-    dm = float(n) - sum(a * s for a, s in zip(coef, sums))
-    base = (1.0 - d) + d * dm / float(n)
     # contrib_K = Σ_j coef_j · w_j — one union+sum job, vertex-sized.
     scaled = [
         w.select("dst", (F.col("x") * F.lit(a)).alias("c"))
@@ -398,6 +405,135 @@ def pagerank(
                 + F.lit(d) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("pagerank"),
         )
+    )
+
+
+def _power_series(
+    n: int,
+    d: float,
+    s1: float,
+    grow: Callable[[], float],
+    max_iter: int,
+    tol: float | None,
+    check_every: int,
+) -> tuple[list[float], float]:
+    """The coefficient recurrence of ``pagerank``, shared by both of
+    its physical paths: plain floats over the power-vector sums.
+    ``s1`` = Σw_1; ``grow()`` computes the next power vector and
+    returns its sum — it is called only while neither ``tol`` nor
+    exhaustion has stopped the series. Returns ``(coef, base)``: the
+    ranks are ``base + d·Σ_j coef_j·w_j``.
+    """
+    sums = [s1]
+    coef = [1.0]  # contrib_1 = w_1
+    # A annihilates a power vector (Σw_j = 0 with w ≥ 0 ⇒ w_j is
+    # identically zero ⇒ every later w is zero too: A is linear and
+    # positivity-preserving). From that point the remaining rounds
+    # are pure coefficient arithmetic — no more jobs. Not a corner
+    # case: any DAG reaches it at depth ≤ diameter, and the bipartite
+    # trade graph reaches it at j = 2, which turns 11 of the bench
+    # query's 12 rounds into driver-side floats.
+    exhausted = s1 == 0.0
+    for i in range(1, max_iter):
+        dm = float(n) - sum(a * s for a, s in zip(coef, sums))
+        base = (1.0 - d) + d * dm / float(n)
+        if not exhausted:
+            s_next = grow()
+            if s_next == 0.0:
+                exhausted = True  # zero frame: drop it, and all later
+            else:
+                sums.append(s_next)
+        # truncation is exact: coefficients shifted past len(sums)
+        # would multiply identically-zero frames
+        new_coef = ([base] + [d * a for a in coef])[: len(sums)]
+        if tol is not None and (i + 1) % check_every == 0:
+            padded = coef + [0.0]
+            bound = sum(abs(a - b) * s for a, b, s in zip(new_coef, padded, sums))
+            coef = new_coef
+            if bound < tol * n:
+                break
+        else:
+            coef = new_coef
+    dm = float(n) - sum(a * s for a, s in zip(coef, sums))
+    return coef, (1.0 - d) + d * dm / float(n)
+
+
+def _pagerank_in_task(
+    edges: DataFrame,
+    d: float,
+    max_iter: int,
+    tol: float | None,
+    check_every: int,
+    weight_col: str | None,
+) -> DataFrame:
+    """``pagerank``'s small-graph path: the whole power series inside
+    ONE task over the checkpointed edge list, with the same semantics
+    as the distributed loop — edges with a NULL src are dropped, a
+    NULL dst is a vertex that absorbs mass but ranks at ``base``."""
+    # the id type the distributed path's src ∪ dst union resolves to
+    id_type = edges.select("src").union(edges.select("dst")).schema[0].dataType
+    w = F.lit(1.0) if weight_col is None else F.col(weight_col).cast("double")
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = pa.Table.from_batches(list(batches))
+        t = t.filter(pc.is_valid(t.column("src")))
+        src_ids, dst_ids = t.column("src"), t.column("dst")
+        vid = pc.unique(
+            pa.chunked_array(src_ids.chunks + dst_ids.chunks, type=src_ids.type)
+        ).drop_null()
+        nv = len(vid)
+        sc = pc.index_in(src_ids, value_set=vid).to_numpy()
+        # a NULL dst takes slot nv: it receives mass (counted in S_j,
+        # so not dangling) and never sends any
+        dc = pc.index_in(dst_ids, value_set=vid).fill_null(nv).to_numpy()
+        if dst_ids.null_count:
+            vid = pa.concat_arrays([vid, pa.nulls(1, vid.type)])
+        n = len(vid)
+        if n == 0:
+            return
+        wt = t.column("w").to_numpy()
+        p = wt / np.bincount(sc, weights=wt, minlength=nv)[sc]
+
+        def power_vectors():
+            x = np.bincount(dc, weights=p, minlength=n)
+            while True:
+                yield x
+                x = np.bincount(dc, weights=x[sc] * p, minlength=n)
+
+        ws = power_vectors()
+        coef, base = _power_series(
+            n,
+            d,
+            float(next(ws).sum()),
+            lambda: float(next(ws).sum()),
+            max_iter,
+            tol,
+            check_every,
+        )
+        # a second pass over the vectors instead of keeping them all:
+        # memory stays O(n + m) whatever max_iter is
+        rank = base + d * sum(a * x for a, x in zip(coef, power_vectors()))
+        # the distributed path's final join never matches a NULL id
+        rank[nv:] = base
+        yield pa.RecordBatch.from_arrays([vid, pa.array(rank)], ["id", "pagerank"])
+
+    # the kernel calls ``_power_series`` on a Python worker: ship this
+    # module's functions by value so the worker need not import the
+    # package (it is not installed where the driver only has it on
+    # sys.path)
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    return (
+        edges.select(
+            F.col("src").cast(id_type).alias("src"),
+            F.col("dst").cast(id_type).alias("dst"),
+            w.alias("w"),
+        )
+        .coalesce(1)
+        .mapInArrow(kernel, f"id {id_type.simpleString()}, pagerank double")
     )
 
 

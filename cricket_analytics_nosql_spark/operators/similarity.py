@@ -701,7 +701,7 @@ def _assign_with_radii(
     dim: int,
     vcol: str = "v",
     literal_max: int = ARGMIN_LITERAL_MAX_SCALARS,
-) -> tuple[DataFrame, dict[int, float]]:
+) -> tuple[DataFrame, dict[int, float], dict[int, int]]:
     """Cell assignment AND per-cell angular radii in ONE corpus pass
     (round 12, guide §5/§1.5): the radius r_cell = max θ(member,
     centroid) rides the assignment checkpoint job as an Observation
@@ -1914,9 +1914,12 @@ def exact_cosine_pairs(
         with np.errstate(invalid="ignore", divide="ignore"):
             cosm = (cmat @ cmat.T) / np.outer(nrm, nrm)
         theta = np.arccos(np.clip(cosm, -1.0, 1.0))
+        # a zero-norm centroid has no direction: its NaN angle would
+        # compare False and drop every pair of its cell, the diagonal
+        # included. θ = 0 keeps them all — conservative, since
+        # survivors are re-verified exactly below.
+        theta = np.where(np.isfinite(theta), theta, 0.0)
         rv = np.asarray([radii[c] for c in live])
-        # NaN (zero-norm centroid) compares False → excluded, the
-        # same outcome as the old NULL-yielding JVM division
         ok = theta - rv[:, None] - rv[None, :] <= theta_tau + 1e-6
         cand = [
             (live[i], live[j])

@@ -1043,9 +1043,12 @@ def lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver where the old shuffle join degraded gracefully. Two-tier
     # gate, costing the bench plan nothing: below the input-size gate
     # (Catalyst scan estimate, no job) the bigram-type count is
-    # PROVABLY broadcast-safe (types ≤ bigram tokens ≤ input bytes),
-    # so broadcast directly — the sf0.1 bench corpus is ~0.6 MB and
-    # keeps its exact round-11 plan. Above it, materialize the
+    # broadcast-safe by a heuristic bound (types ≤ bigram tokens ≤
+    # input bytes — but the estimate measures compressed on-disk
+    # bytes, so it can understate the raw text; text that compresses
+    # well has few distinct bigrams, which leaves a wide practical
+    # margin), so broadcast directly — the sf0.1 bench corpus is
+    # ~0.6 MB and keeps its exact round-11 plan. Above it, materialize the
     # vocabulary-sized LM once with its type count observed on the
     # same job (at that scale the probe pass wants a materialized
     # build side anyway) and broadcast only under the row cap —

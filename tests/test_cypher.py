@@ -136,6 +136,31 @@ def test_cypher_e_pagerank(deliveries, edges):
         assert g.score == pytest.approx(w.pagerank, abs=1e-6)
 
 
+def test_cypher_pagerank_job_budget_and_session_conf(spark, edges):
+    """gds.pageRank on the cricket fixture fits the per-task edge
+    budget, so its power series runs inside one task: the whole call,
+    collect included, runs at most 8 jobs (the distributed loop ran
+    two per round), and it leaves the session conf as it found it."""
+    q = """
+    CALL gds.pageRank.stream('duels')
+    YIELD nodeId, score
+    RETURN gds.util.asNode(nodeId).name AS player, score
+    ORDER BY score DESC LIMIT 20
+    """
+    sc = spark.sparkContext
+    tag = "test_cypher_pagerank_job_budget"
+    before = spark.conf.getAll
+    sc.addJobTag(tag)
+    try:
+        rows = compile_cypher(q, edges).collect()
+    finally:
+        sc.removeJobTag(tag)
+    jobs = sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+    assert len(rows) == len(BATTERS) + len(BOWLERS)
+    assert 0 < len(jobs) <= 8, len(jobs)
+    assert spark.conf.getAll == before
+
+
 def test_cypher_d_graph_project(edges):
     """cypher_queries.cypher:28 — the projection is the collapsed
     weighted edge frame (G1)."""

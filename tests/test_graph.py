@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cricket_analytics_nosql_spark.operators import graph as graph_ops
 from cricket_analytics_nosql_spark.operators.graph import (
     faced_edges,
     pagerank,
@@ -21,59 +22,134 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
 
 
-def test_pagerank_two_cycle(spark):
+@pytest.fixture
+def pagerank_paths(monkeypatch):
+    """Iterate to run a test body once per physical ``pagerank`` path:
+    first in one task (every test graph fits the per-task edge
+    budget), then the distributed loop, forced by a zero budget. One
+    test covers both paths, so the test ids stay as they were."""
+
+    def paths():
+        yield "in_task"
+        monkeypatch.setattr(graph_ops, "EDGES_PER_TASK", 0)
+        yield "distributed"
+
+    return paths()
+
+
+def test_pagerank_two_cycle(spark, pagerank_paths):
     """A↔B: perfectly symmetric, ranks must both be 1.0 exactly."""
-    pr = {r.id: r.pagerank for r in pagerank(_edges(spark, [("A", "B"), ("B", "A")]), max_iter=10).collect()}
-    assert pr == {"A": pytest.approx(1.0), "B": pytest.approx(1.0)}
+    for path in pagerank_paths:
+        pr = {r.id: r.pagerank for r in pagerank(_edges(spark, [("A", "B"), ("B", "A")]), max_iter=10).collect()}
+        assert pr == {"A": pytest.approx(1.0), "B": pytest.approx(1.0)}, path
 
 
-def test_pagerank_hand_computed_chain(spark):
+def test_pagerank_hand_computed_chain(spark, pagerank_paths):
     """A→B→C with C dangling. Hand-computed fixed point of
     r = 0.15 + 0.85*(in + dangling/3), scores sum to N=3."""
-    pr = {
-        r.id: r.pagerank
-        for r in pagerank(
-            _edges(spark, [("A", "B"), ("B", "C")]), max_iter=50, tol=None
-        ).collect()
-    }
-    assert sum(pr.values()) == pytest.approx(3.0, abs=1e-5)
-    # fixed point solved by hand with s = 0.85/3:
-    #   rA = 0.15 + s*rC
-    #   rB = 0.15 + 0.85*rA + s*rC
-    #   rC = 0.15 + 0.85*rB + s*rC
-    # → rC = 0.385875 / (1 - s*(1 + 0.85 + 0.85^2)) ≈ 1.423237
-    assert pr["A"] == pytest.approx(0.553250, abs=1e-3)
-    assert pr["B"] == pytest.approx(1.023529, abs=1e-3)
-    assert pr["C"] == pytest.approx(1.423237, abs=1e-3)
-    assert pr["C"] > pr["B"] > pr["A"]
+    for path in pagerank_paths:
+        pr = {
+            r.id: r.pagerank
+            for r in pagerank(
+                _edges(spark, [("A", "B"), ("B", "C")]), max_iter=50, tol=None
+            ).collect()
+        }
+        assert sum(pr.values()) == pytest.approx(3.0, abs=1e-5), path
+        # fixed point solved by hand with s = 0.85/3:
+        #   rA = 0.15 + s*rC
+        #   rB = 0.15 + 0.85*rA + s*rC
+        #   rC = 0.15 + 0.85*rB + s*rC
+        # → rC = 0.385875 / (1 - s*(1 + 0.85 + 0.85^2)) ≈ 1.423237
+        assert pr["A"] == pytest.approx(0.553250, abs=1e-3), path
+        assert pr["B"] == pytest.approx(1.023529, abs=1e-3), path
+        assert pr["C"] == pytest.approx(1.423237, abs=1e-3), path
+        assert pr["C"] > pr["B"] > pr["A"], path
 
 
-def test_pagerank_mass_conservation_star(spark):
+def test_pagerank_mass_conservation_star(spark, pagerank_paths):
     """Hub-and-spoke: total mass N regardless of structure; hub
     (most in-links) ranks highest."""
     edges = _edges(
         spark, [("S1", "H"), ("S2", "H"), ("S3", "H"), ("H", "S1")]
     )
-    rows = pagerank(edges, max_iter=40).collect()
-    total = sum(r.pagerank for r in rows)
-    assert total == pytest.approx(4.0, abs=1e-5)
-    top = max(rows, key=lambda r: r.pagerank)
-    assert top.id == "H"
+    for path in pagerank_paths:
+        rows = pagerank(edges, max_iter=40).collect()
+        total = sum(r.pagerank for r in rows)
+        assert total == pytest.approx(4.0, abs=1e-5), path
+        top = max(rows, key=lambda r: r.pagerank)
+        assert top.id == "H", path
 
 
-def test_pagerank_empty(spark):
-    assert pagerank(_edges(spark, [])).count() == 0
+def test_pagerank_empty(spark, pagerank_paths):
+    for path in pagerank_paths:
+        assert pagerank(_edges(spark, [])).count() == 0, path
 
 
-def test_pagerank_copartitioned_branch_matches_broadcast(spark, sf_small):
+def _ranks(edges, **kw):
+    return {r.id: r.pagerank for r in pagerank(edges, **kw).collect()}
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["cricket_strings", "tol_early_stop", "dag_exhausts", "dangling", "null_endpoints"],
+)
+def test_pagerank_in_task_matches_distributed(spark, deliveries, monkeypatch, case):
+    """The in-task path and the distributed loop compute the same
+    ranks to 1e-9 on every vertex: string ids (the cricket duel
+    graph), a ``tol`` early stop, a DAG whose power vectors run out
+    before ``max_iter``, dangling vertices, and NULL endpoints (an
+    edge with a NULL src is dropped; a NULL dst is a vertex that
+    absorbs mass and ranks at the teleport base)."""
+    kw = {"max_iter": 15, "tol": None}
+    if case == "cricket_strings":
+        edges = faced_edges(deliveries).select("src", "dst")
+        kw = {"max_iter": 20}
+    elif case == "tol_early_stop":
+        edges = _edges(
+            spark,
+            [("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"), ("C", "D"), ("D", "B")],
+        )
+        kw = {"max_iter": 40, "tol": 1e-2, "check_every": 2}
+    elif case == "dag_exhausts":
+        edges = _edges(spark, [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")])
+    elif case == "dangling":
+        edges = _edges(
+            spark, [("S1", "H"), ("S2", "H"), ("H", "S1"), ("H", "D1"), ("S1", "D2")]
+        )
+    else:
+        edges = _edges(
+            spark,
+            [("A", "B"), ("B", "A"), ("A", None), (None, "C"), ("C", "A"),
+             ("B", "D"), (None, "E"), (None, None)],
+        )
+    in_task = _ranks(edges, **kw)
+    monkeypatch.setattr(graph_ops, "EDGES_PER_TASK", 0)
+    distributed = _ranks(edges, **kw)
+    assert in_task.keys() == distributed.keys()
+    for v, r in in_task.items():
+        assert r == pytest.approx(distributed[v], abs=1e-9), v
+    if case == "tol_early_stop":
+        # the bound really stopped the recurrence before max_iter
+        full = _ranks(edges, max_iter=40, tol=None)
+        assert max(abs(full[v] - r) for v, r in in_task.items()) > 1e-9
+    if case == "null_endpoints":
+        assert None in in_task and "E" not in in_task
+
+
+def test_pagerank_copartitioned_branch_matches_broadcast(
+    spark, sf_small, monkeypatch
+):
     """The large-graph path (broadcast_max_vertices exceeded → edge
     list pre-partitioned on the join key, w frames shuffled instead
     of broadcast) must produce the SAME ranks as the broadcast path —
     the physical strategy may not change the fixed point. Forced with
     broadcast_max_vertices=0 on the real sf0.001 trade graph (the
-    bidirectional PageRank binding, cycles and all)."""
+    bidirectional PageRank binding, cycles and all), inside the
+    distributed loop (zero per-task edge budget) — the in-task path
+    has no broadcast decision."""
     from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
 
+    monkeypatch.setattr(graph_ops, "EDGES_PER_TASK", 0)
     edges = trade_graph_edges(spark, sf_small)
     small = {
         r.id: r.pagerank
@@ -360,9 +436,10 @@ def test_deterministic_walks_dead_end_and_reproducibility(spark):
     assert w1 == w2
 
 
-def test_weighted_pagerank_matches_python_power_iteration(spark):
+def test_weighted_pagerank_matches_python_power_iteration(spark, pagerank_paths):
     """Weighted mode vs a pure-Python power iteration on a small
-    weighted digraph, same fixed budget, agreement to 1e-9."""
+    weighted digraph, same fixed budget, agreement to 1e-9, on both
+    paths."""
     from cricket_analytics_nosql_spark.operators.graph import pagerank
 
     edges = [
@@ -382,18 +459,19 @@ def test_weighted_pagerank_matches_python_power_iteration(spark):
         ranks = nxt
 
     df = spark.createDataFrame(edges, "src long, dst long, weight double")
-    got = {
-        r.id: r.pagerank
-        for r in pagerank(
-            df, max_iter=iters, tol=None, weight_col="weight"
-        ).collect()
-    }
-    assert set(got) == set(ranks)
-    for v in ranks:
-        assert abs(got[v] - ranks[v]) < 1e-9, (v, got[v], ranks[v])
+    for path in pagerank_paths:
+        got = {
+            r.id: r.pagerank
+            for r in pagerank(
+                df, max_iter=iters, tol=None, weight_col="weight"
+            ).collect()
+        }
+        assert set(got) == set(ranks), path
+        for v in ranks:
+            assert abs(got[v] - ranks[v]) < 1e-9, (path, v, got[v], ranks[v])
 
 
-def test_weighted_pagerank_rejects_nonpositive_weights(spark):
+def test_weighted_pagerank_rejects_nonpositive_weights(spark, pagerank_paths):
     import pytest
 
     from cricket_analytics_nosql_spark.operators.graph import pagerank
@@ -401,8 +479,9 @@ def test_weighted_pagerank_rejects_nonpositive_weights(spark):
     bad = spark.createDataFrame(
         [(0, 1, 2.0), (1, 0, 0.0)], "src long, dst long, weight double"
     )
-    with pytest.raises(ValueError, match="positive"):
-        pagerank(bad, max_iter=2, tol=None, weight_col="weight")
+    for _ in pagerank_paths:
+        with pytest.raises(ValueError, match="positive"):
+            pagerank(bad, max_iter=2, tol=None, weight_col="weight")
 
 
 def _duckdb_pagerank_sql(k_iters: int, d: float, weighted: bool) -> str:
@@ -462,33 +541,37 @@ r{i} AS MATERIALIZED (
 
 
 @pytest.mark.parametrize("weighted", [False, True])
-def test_pagerank_matches_unrolled_duckdb(spark, sf_small, weighted):
-    """Full-vector differential: the Spark Krylov-formulated loop vs
-    12 literally-unrolled power iterations in DuckDB on the real
-    sf0.001 trade graph. Agreement to 1e-9 absolute on every vertex
-    — an independent engine, an independent formulation."""
+def test_pagerank_matches_unrolled_duckdb(
+    spark, sf_small, weighted, pagerank_paths
+):
+    """Full-vector differential: the Spark Krylov-formulated
+    recurrence, on both paths, vs 12 literally-unrolled power
+    iterations in DuckDB on the real sf0.001 trade graph. Agreement
+    to 1e-9 absolute on every vertex — an independent engine, an
+    independent formulation."""
     from tools.parity import duckdb_connection
 
     from cricket_analytics_nosql_spark.operators.graph import trade_graph_edges
 
-    edges = trade_graph_edges(spark, sf_small)
-    got = {
-        r.id: r.pagerank
-        for r in pagerank(
-            edges,
-            max_iter=12,
-            tol=None,
-            weight_col="weight" if weighted else None,
-        ).collect()
-    }
     con = duckdb_connection(sf_small)
     want = dict(
         con.execute(_duckdb_pagerank_sql(12, 0.85, weighted)).fetchall()
     )
     con.close()
-    assert got.keys() == want.keys()
-    for vid, r in want.items():
-        assert got[vid] == pytest.approx(r, abs=1e-9), vid
+    edges = trade_graph_edges(spark, sf_small)
+    for path in pagerank_paths:
+        got = {
+            r.id: r.pagerank
+            for r in pagerank(
+                edges,
+                max_iter=12,
+                tol=None,
+                weight_col="weight" if weighted else None,
+            ).collect()
+        }
+        assert got.keys() == want.keys(), path
+        for vid, r in want.items():
+            assert got[vid] == pytest.approx(r, abs=1e-9), (path, vid)
 
 
 def test_sssp_deep_with_checkpointing_is_wall_bounded(spark):

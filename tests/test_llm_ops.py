@@ -382,6 +382,65 @@ def test_exact_cosine_pairs_equals_all_pairs_and_prunes(spark):
     assert len(want) > 100  # the clusters actually produce near-dups
 
 
+def test_exact_cosine_pairs_zero_norm_centroid_equals_all_pairs(spark):
+    """A zero-norm centroid has no direction, so its cell-pair angle
+    is undefined (NaN). The prune must keep that cell's pairs, the
+    diagonal included, and the result must still equal all-pairs.
+    The zero cell is made to win the argmin for one cluster and the
+    noise. ANSI is off because under ANSI the assignment's angle
+    division raises on the zero norm before the prune runs."""
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from cricket_analytics_nosql_spark.operators.similarity import (
+        _assign_with_radii,
+        cosine,
+        exact_cosine_pairs,
+    )
+
+    rng = np.random.RandomState(5)
+    anchors = rng.randn(3, 64) * 4
+    rows = []
+    for a in anchors:
+        for _ in range(30):
+            rows.append((len(rows), (a + rng.randn(64) * 0.3).tolist()))
+    for _ in range(20):
+        rows.append((len(rows), rng.randn(64).tolist()))
+    emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    # the zero centroid scores 0; the others score ‖c‖² − 2·v·c > 0
+    # for every vector outside their own cluster
+    cent_rows = [
+        (0, [0.0] * 64),
+        (1, anchors[0].tolist()),
+        (2, anchors[1].tolist()),
+    ]
+    cents = spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
+    tau = 0.9
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        _, _, sizes = _assign_with_radii(emb, cent_rows, 64)
+        assert sizes.get(0, 0) >= 30  # the degenerate cell is populated
+        got = {
+            (r.v1, r.v2)
+            for r in exact_cosine_pairs(emb, tau=tau, centroids=cents).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    a = emb.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
+    b = emb.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
+    want = {
+        (r.v1, r.v2)
+        for r in a.crossJoin(b)
+        .filter(F.col("v1") < F.col("v2"))
+        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= tau)
+        .collect()
+    }
+    assert len(want) > 100
+    assert got == want
+
+
 def test_chunking_reconstructs_documents(spark):
     """Overlapping chunks lose no characters: stitching each chunk's
     first `stride` chars (full last chunk) reproduces the document.
